@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from corporate_knowledge_extractor_spark.config import LinkingConfig
 from corporate_knowledge_extractor_spark.materialize import materialize
 from corporate_knowledge_extractor_spark.operators.linking import (
-    minhash_signature,
     shingle_col,
     shingle_hashes,
 )
@@ -131,7 +130,7 @@ DOC_DEDUP_CFG = LinkingConfig(num_hashes=32, num_bands=8, shingle_size=3)
 # 8 bands x 4 rows -> s-curve threshold (1/8)^(1/4) ~ 0.59, matched to the
 # 0.6 exact-verify threshold. Word 3-gram shingles (not character 5-grams):
 # a document has ~10x fewer word-shingles than char-shingles, and the
-# signature stage (num_hashes interpreted array_min folds per doc) is
+# signature stage (num_hashes min() aggregates over every shingle) is
 # linear in num_hashes x shingles — the combined 2x fewer hashes + 10x
 # fewer shingles cut the sf0.1 minhash_neardup wall from 43s to ~3s with
 # the same near-dup semantics the reference's word-overlap similarity
@@ -152,9 +151,6 @@ def minhash_lsh_pairs(
     corpus size (band explode + bucket groupJoin), exact Jaccard only on
     collided candidates.
 
-    The shingle array is computed ONCE (materialized with the base table)
-    and reused by both the banding pass and the exact-verify join —
-    re-deriving it for verify doubled the dominant cost of the whole job.
     ``char_shingles=True`` switches to character k-shingles (for short
     strings like entity surfaces, where word grams are degenerate).
     ``hash_fn`` selects the per-shingle hash family: the xxhash64 fast
@@ -162,66 +158,45 @@ def minhash_lsh_pairs(
     certification — both verified to emit the same final pair set
     (tests/test_dedup_similarity.py).
 
-    Round-6 shape (guide §4.1, §5): the shingle array is a single
-    codegen'd regex pass (see word_shingles), cheap enough that the base
-    cache holds only the normalized TEXT (4x smaller than caching the
-    arrays; the array cache's deserialization dominated the verify
-    phase's three scans) and each consumer derives shingles on the fly:
-    the banding path explodes them into shingle rows whose hashing and
-    num_hashes signature minima are codegen'd scalar expressions and
-    min() aggregates — the whole spread -> explode -> aggregate chain
-    rides ONE hash(id) partitioning with no extra exchange
-    (linking.lsh_band_keys) — and the verify path re-derives arrays for
-    the candidate docs only. Measured ~15% wall / 20% CPU under the
-    array-cached form at sf1.0, same pair set."""
+    Three Spark actions per call: the per-document ``(id, sh)`` shingle
+    table is materialized once and read by both sides — banding explodes
+    it, and the exact-verify joins look arrays up in it; the band table
+    is materialized inside linking.candidate_id_pairs (its hot-bucket cap
+    scans it twice, and recomputing the num_hashes min() signature costs
+    more than the extra job); the caller's action runs the one result
+    query, candidate pairs joined to both shingle sides. Candidate pairs
+    are not persisted: their only consumer is that query. Against the
+    five-action form this replaced (a normalized-text cache, then the
+    pairs and a candidates-only shingle table each materialized),
+    measured with kgbench `neardup` on 4 cores under the C1 JIT: 23 -> 15
+    jobs and a median 10.1 -> 8.1 CPU-s per call at 3,000 texts, 38.1 ->
+    37.6 CPU-s at 30,000, identical pair sets. The price is memory: the
+    cached arrays take ~4.5x the bytes of the text (46.8 MB against
+    10.5 MB at 30,000 texts). Caching only the text and deriving
+    shingles per pair row in the verify instead cost 170 against 35
+    CPU-s on 3,000 texts in 30 near-dup clusters, where pair rows
+    (140k) far outnumber documents."""
     from corporate_knowledge_extractor_spark.operators.linking import (
         candidate_id_pairs,
         lsh_band_keys,
     )
 
-    def sh_of(col: F.Column) -> F.Column:
-        return (
-            shingle_col(col, cfg.shingle_size)
-            if char_shingles
-            else word_shingles(col, cfg.shingle_size)
-        )
-
+    t = F.col("t")
+    # word_shingles normalizes its input itself
+    sh = (
+        shingle_col(normalize_text(t), cfg.shingle_size)
+        if char_shingles
+        else word_shingles(t, cfg.shingle_size)
+    )
     base = materialize(
-        spread(
-            docs.select(
-                F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t")
-            ),
-            "id",
-        )
+        spread(docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
+        .select("id", sh.alias("sh"))
     )
-    banded = lsh_band_keys(base, "id", sh_of(F.col("t")), cfg, hash_fn=hash_fn)
-    # pairs feeds three downstream scans (cand_ids + both sides of the
-    # verify join); materialize the slim (id_a, id_b) table once, eagerly
-    # (materialize.py policy: eager serialized persist, releasable via
-    # clearCache — unlike the localCheckpoint this replaced)
-    pairs = materialize(candidate_id_pairs(banded, cfg))
-    # exact Jaccard only for *distinct candidate documents* — orders of
-    # magnitude fewer than pair occurrences
-    cand_ids = (
-        pairs.select(F.col("id_a").alias("id"))
-        .unionByName(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
+    pairs = candidate_id_pairs(
+        lsh_band_keys(base, "id", F.col("sh"), cfg, hash_fn=hash_fn), cfg
     )
-    # sh_tbl is a fan-out: BOTH verify join sides consume it, and Spark
-    # re-executes an unmaterialized subtree per consumer — profiled at
-    # 50k docs the verify phase (~2.4 s of 5.6) ran the base cache scan
-    # and the regex shingle derivation twice. Materializing the slim
-    # candidates-only table (rows = distinct candidate ids, bounded by
-    # the capped pair volume, NOT corpus size) halves that work and lets
-    # AQE broadcast the tiny relation into both joins (guide §5 caching
-    # rule: reused AND expensive to recompute).
-    sh_tbl = materialize(
-        base.join(cand_ids, "id", "left_semi").select(
-            "id", sh_of(F.col("t")).alias("sh")
-        )
-    )
-    a = sh_tbl.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh_tbl.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
     return (
         pairs.join(a, "id_a")

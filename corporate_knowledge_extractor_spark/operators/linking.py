@@ -7,9 +7,10 @@ alias variants (`get_user_data` / `getUserData` / `get_user_data_v2`), so
 per BASELINE.json this generalizes to MinHash-LSH blocking + a Jaccard
 scorer over candidate pairs.
 
-Everything here is native column expressions — shingles via
-`transform(sequence(...))`, per-permutation min-hash via
-`array_min(transform(...))`, band keys via `xxhash64` — no Python at all.
+Everything here is native column expressions — no Python at all. The
+signature explodes the shingle array, hashes each shingle with a scalar
+codegen'd hash and takes the per-permutation minima as plain min()
+aggregates; band keys are `xxhash64` over slices of those minima.
 The O(n^2) similarity join becomes O(sum of block^2) with blocks bounded
 by `max_block_size` (Zipfian hot-block skew control; precedent:
 the reference's max_total row cap, src/frames/extractor.py:152-154).
@@ -166,8 +167,8 @@ def lsh_band_keys(
     before any exchange, and every expression in the pass is
     whole-stage-codegen. The previous form (num_hashes interpreted
     array_min(transform(...)) passes per row) measured 3-5x slower on
-    the sf1.0 bench corpus (scripts/exp_minhash_r06.py; identical final
-    pair set asserted there). Items whose shingle array is empty would
+    the sf1.0 bench corpus with an identical final pair set
+    (OPTIMIZATION_r06.md). Items whose shingle array is empty would
     vanish at the explode; they produce no band keys either way (an
     empty array has no minima), and word_shingles/shingle_col always
     emit at least one shingle, so the pair sets are identical.
@@ -175,28 +176,13 @@ def lsh_band_keys(
     exploded = items.select(
         F.col(id_col).alias("id"), F.explode(shingles).alias("_s")
     )
-    return lsh_band_keys_from_rows(exploded, cfg, hash_fn=hash_fn)
-
-
-def lsh_band_keys_from_rows(
-    shingle_rows: DataFrame,
-    cfg: LinkingConfig = LinkingConfig(),
-    hash_fn=shingle_hashes,
-) -> DataFrame:
-    """Banding over pre-exploded ``(id, _s)`` shingle rows — the shared
-    machinery behind lsh_band_keys, exposed so callers that can produce
-    shingle rows without materializing per-item arrays (see
-    dedup.minhash_lsh_pairs' window-lead tokenizer) skip the interpreted
-    array build entirely. Duplicate shingle rows are harmless: the
-    signature is a min over permuted hashes, so multiplicity cannot
-    change any minimum, and band keys depend only on the signature."""
     rows_per_band = cfg.num_hashes // cfg.num_bands
     params = _perm_params(cfg.num_hashes)
     scalar_hash = _SCALAR_HASH.get(hash_fn)
     if scalar_hash is not None:
-        hashed = shingle_rows.select("id", scalar_hash(F.col("_s")).alias("_h"))
+        hashed = exploded.select("id", scalar_hash(F.col("_s")).alias("_h"))
     else:  # unknown array-level hash family: hash per row via a 1-element array
-        hashed = shingle_rows.select(
+        hashed = exploded.select(
             "id", F.element_at(hash_fn(F.array(F.col("_s"))), 1).alias("_h")
         )
     sigs = hashed.groupBy("id").agg(

@@ -9,8 +9,6 @@ remaining steps run here on the triples table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,15 +27,15 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     earliest row per key is min_by(payload, struct(line_no, frame_id)) —
     (line_no, frame_id) is unique within a document (frame_id is the
     per-doc mention index), so the minimum IS the row_number()=1 row of
-    the window form this replaces. min_by aggregates hash-based
-    (ObjectHashAggregate — a min over a struct-typed column would fall
-    back to SortAggregate and reintroduce two sorts) and partially
-    map-side, so at most one candidate row per (input partition, key)
-    crosses any exchange — and when the input already clusters by the
-    doc key (synthesize_triples preserves it), the whole dedup runs in
-    place with no exchange and no sort at all; the window form shuffled
-    and sorted the full pre-dedup triple set (measured 1.1 GB at
-    sf1.0)."""
+    the window form this replaces. min_by's buffer holds a struct, which
+    is not a fixed-width mutable type, so Spark plans it as SortAggregate
+    (checked on the extract plan): one in-partition sort feeding the
+    partial and final aggregates. Partial aggregation runs map-side, so
+    at most one candidate row per (input partition, key) crosses any
+    exchange — and when the input already clusters by the doc key
+    (synthesize_triples preserves it), partial and final run back to
+    back with no exchange at all; the window form shuffled and sorted
+    the full pre-dedup triple set (measured 1.1 GB at sf1.0)."""
     # whitespace-guarded normalization: trim(regexp_replace(lower(c),
     # '\s+', ' ')) is exactly lower(c) when the string contains no
     # whitespace (replace is a no-op, nothing to trim) — and triple
@@ -70,15 +68,6 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-# broadcast the known-surfaces dim only when its MEASURED row count is
-# below this (distinct identifiers are short strings; 1M rows is a few
-# tens of MB framed — far under the session's 64 MB auto threshold and
-# the executor budget). Parameterised for deployments with bigger heads.
-KNOWN_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KNOWN_BCAST_ROWS", str(1_000_000))
-)
-
-
 def validate_calls(
     triples: DataFrame,
     probe_known_size: bool = False,
@@ -97,11 +86,13 @@ def validate_calls(
     table is still shuffle-WRITTEN by obj (1.2 GB / 9.2M rows at sf1.0)
     and only the cross-network read is elided. With
     ``probe_known_size=True`` (callers that hold `triples` materialized,
-    so the probe is one cheap cache scan) the known dim is cached and
-    counted first, and broadcast is hinted only under
-    KNOWN_BROADCAST_MAX_ROWS — the statically-planned broadcast join
-    never exchanges the triple side at all. Measured at sf1.0: 7.3-9.1k
-    -> 3.9-6.1k CPU jiffies for the validate pass, same rows."""
+    so the probe is one cheap cache scan) the known dim is cached first,
+    and broadcast is hinted only when its measured in-memory size is
+    within the session's spark.sql.autoBroadcastJoinThreshold — bytes,
+    not rows, so very long identifiers cannot blow the broadcast budget.
+    The statically-planned broadcast join never exchanges the triple
+    side at all. Measured at sf1.0: 7.3-9.1k -> 3.9-6.1k CPU jiffies for
+    the validate pass, same rows."""
     known = (
         triples.where(F.col("pred").isin("defines", "imports_symbol"))
         .select(F.col("obj").alias("_known"))
@@ -110,12 +101,16 @@ def validate_calls(
     if probe_known_size:
         from corporate_knowledge_extractor_spark.materialize import materialize
 
-        known = materialize(known)  # eager: one scan builds dim + its count
+        known = materialize(known)
         if scratch is not None:
             # precise-release contract (see post_process): every frame this
             # call materializes is handed back for the caller to release
             scratch.append(known)
-        if known.count() <= KNOWN_BROADCAST_MAX_ROWS:
+        # a fresh plan picks up the cached relation, whose statistics are
+        # the bytes the materialization measured
+        plan = known.select("_known")._jdf.queryExecution().optimizedPlan()
+        sql_conf = known.sparkSession._jsparkSession.sessionState().conf()
+        if 0 <= plan.stats().sizeInBytes() <= sql_conf.autoBroadcastJoinThreshold():
             known = F.broadcast(known)
     # single-pass form: a split/semi-join/union would scan the (expensive,
     # window-deduped) triples input twice more; the left join against the

@@ -20,6 +20,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+# driver heap default: this share of the host's physical memory
+# (MemTotal), clamped to [min, max] MB. In local mode the driver JVM runs
+# every task, but the Python workers and the calling process share the
+# same RAM, so it gets a minority share.
+DRIVER_HEAP_SHARE = 0.2
+DRIVER_HEAP_MIN_MB, DRIVER_HEAP_MAX_MB = 1024, 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else DRIVER_HEAP_SHARE of the
+    host's memory, clamped — a fixed 48g default let the JVM grow past
+    the physical memory of a 16 GB host until the kernel killed it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mb = int(total_mb * DRIVER_HEAP_SHARE)
+    return f"{max(DRIVER_HEAP_MIN_MB, min(DRIVER_HEAP_MAX_MB, mb))}m"
+
 
 def get_spark(
     app_name: str = "corporate_knowledge_extractor_spark",
@@ -29,7 +48,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32);
+    the driver heap to default_driver_memory().
     ``shuffle_partitions`` defaults to the local core count so small-scale
     runs are not over-parallelized; on a real cluster pass
     ``executors * cores_per_executor * 2``.
@@ -53,7 +73,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-split packing floor (guide §6). The default 4 MB

@@ -9,6 +9,9 @@ from corporate_knowledge_extractor_spark.config import LinkingConfig
 from corporate_knowledge_extractor_spark.operators import dedup, similarity, textstats
 
 DOCS = "doc_id long, text string, lang string"
+# Spark jobs of one minhash_lsh_pairs call on the `docs` fixture, measured
+# on the test session (local[8], 8 shuffle partitions, AQE on)
+MINHASH_JOBS = 15
 
 
 @pytest.fixture(scope="module")
@@ -49,6 +52,84 @@ def test_minhash_lsh_finds_near_dups(docs):
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (0, 1) in got
     assert all(p[0] != 3 and p[1] != 3 for p in got)
+
+
+def test_minhash_lsh_pairs_job_count(spark, docs):
+    """minhash_lsh_pairs makes three actions: the shingle-table and
+    band-table materializations, then the caller's. The job count (AQE
+    runs each shuffle stage as its own job) is pinned at its measured
+    value, so re-adding a materialization fails here."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.setJobGroup("minhash-job-count", "minhash job count")
+    try:
+        got = {(r.id_a, r.id_b) for r in dedup.minhash_lsh_pairs(docs).collect()}
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("minhash-job-count")
+    spark.catalog.clearCache()
+    assert (0, 1) in got
+    assert len(jobs) == MINHASH_JOBS, sorted(jobs)
+
+
+def test_minhash_hostile_clusters(spark):
+    """Clusters of near-identical docs. The under-cap clusters (five
+    texts differing only in their last word, Jaccard ~0.98) must give
+    exactly the brute-force pairs. One cluster is larger than
+    max_block_size and identical after normalization, so every one of
+    its band buckets is over the cap: it must contribute none of its
+    internal pairs (uncapped it would be ~2M candidate pairs), and the
+    call must stay within the stated time bound."""
+    import random
+    import time
+
+    rng = random.Random(23)
+    vocab = [f"w{i}" for i in range(5000)]
+    cap = dedup.DOC_DEDUP_CFG.max_block_size
+    rows, small = [], {}
+    for c in range(20):
+        words = rng.choices(vocab, k=100)
+        for v in range(5):
+            doc_id = len(rows)
+            text = " ".join(words[:-1] + [f"last{c}x{v}"])
+            rows.append((doc_id, text))
+            small[doc_id] = text
+    hot = " ".join(rng.choices(vocab, k=100))
+    n_hot = 10 * cap
+    # the hot cluster differs only in case and whitespace
+    rows += [
+        (len(rows) + i, hot.upper() if i % 2 else hot.replace(" ", "  "))
+        for i in range(n_hot)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    t0 = time.perf_counter()
+    got = {
+        (r.id_a, r.id_b): r.jaccard for r in dedup.minhash_lsh_pairs(docs).collect()
+    }
+    elapsed = time.perf_counter() - t0
+    spark.catalog.clearCache()
+
+    def sh(t):
+        w = t.lower().split()
+        return {" ".join(w[k : k + 3]) for k in range(len(w) - 2)}
+
+    shs = {i: sh(t) for i, t in small.items()}
+    hot_sh = sh(hot)
+    # no under-cap doc is near the hot text, so the brute force over the
+    # whole corpus minus the hot cluster's internal pairs is this one
+    assert all(len(s & hot_sh) / len(s | hot_sh) < 0.6 for s in shs.values())
+    brute = {}
+    for a in shs:
+        for b in shs:
+            if a < b:
+                j = len(shs[a] & shs[b]) / len(shs[a] | shs[b])
+                if j >= 0.6:
+                    brute[(a, b)] = j
+    assert len(brute) == 20 * 10
+    assert got.keys() == brute.keys()
+    assert all(abs(got[p] - brute[p]) <= 1e-4 for p in brute)
+    assert elapsed < 60, f"capped hostile corpus took {elapsed:.1f}s"
 
 
 def test_simhash_near_dups(docs):

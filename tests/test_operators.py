@@ -142,6 +142,21 @@ def test_validate_calls_semi_join(spark):
     assert ("calls", "known_fn") in preds
     assert ("defines", "known_fn") in preds
 
+    # probe_known_size: the known dim is broadcast exactly when its
+    # measured bytes fit the session's broadcast threshold
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        for threshold, broadcast in ((saved, True), ("1", False)):
+            spark.conf.set(key, threshold)
+            probed = validate_calls(t, probe_known_size=True)
+            plan = probed._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == broadcast, plan
+            assert sorted((r.pred, r.obj) for r in probed.collect()) == preds
+    finally:
+        spark.conf.set(key, saved)
+        spark.catalog.clearCache()
+
 
 def test_categorize_argmax_and_default(spark):
     t = spark.createDataFrame(

@@ -14,32 +14,59 @@ from __future__ import annotations
 
 import duckdb
 
-from parity_util import rows_to_multiset
-
 from corporate_knowledge_extractor_spark.plans.queries import REGISTRY, resolve_sql
 
 SF_DIR = "/root/testdata/sf0.1"
 
 
-def test_kg_triples_oracle_at_sf01(spark):
-    sdf = REGISTRY["kg_triples"].fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+def _canon_select(con, table: str) -> str:
+    """Columns in name order, floats rounded to 4 places as
+    parity_util.canon does, every value compared as text."""
+    cols = sorted(con.execute(f"DESCRIBE {table}").fetchall())
+    return ", ".join(
+        f'CAST(round("{c}", 4) AS VARCHAR)' if t in ("FLOAT", "DOUBLE")
+        else f'CAST("{c}" AS VARCHAR)'
+        for c, t, *_ in cols
+    )
+
+
+def test_kg_triples_oracle_at_sf01(spark, tmp_path):
+    """Both sides stay out of the Python heap: Spark writes its ~1M
+    triples to parquet and DuckDB compares them with the oracle's as
+    multisets (EXCEPT ALL both ways), instead of collecting both row
+    lists into Python."""
+    got_path = str(tmp_path / "kg_triples")
+    REGISTRY["kg_triples"].fn(spark, SF_DIR).write.parquet(got_path)
     spark.catalog.clearCache()
 
-    con = duckdb.connect()
+    # DuckDB runs in this process; left at its default (80% of RAM) it
+    # grew to ~13 GB beside the Spark JVM and the host thrashed. Bounded,
+    # it spills what it can and otherwise fails with OutOfMemoryException.
+    con = duckdb.connect(
+        config={"memory_limit": "9GB", "temp_directory": str(tmp_path / "duck")}
+    )
     # the oracle infers scale by probing the registered events view
     # (100k rows at sf0.1) — same registration the driver harness does
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
-    res = con.execute(resolve_sql(REGISTRY["kg_triples"]))
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+    con.execute(f"CREATE VIEW got AS SELECT * FROM '{got_path}/*.parquet'")
+    oracle = resolve_sql(REGISTRY["kg_triples"]).strip().rstrip(";")
+    con.execute(f"CREATE TABLE want AS {oracle}")
+    names = {
+        t: sorted(r[0] for r in con.execute(f"DESCRIBE {t}").fetchall())
+        for t in ("got", "want")
+    }
+    n = {t: con.execute(f"SELECT count(*) FROM {t}").fetchone()[0] for t in names}
+    got, want = _canon_select(con, "got"), _canon_select(con, "want")
+    only_got, only_want = (
+        con.execute(f"SELECT count(*) FROM ({q})").fetchone()[0]
+        for q in (
+            f"SELECT {got} FROM got EXCEPT ALL SELECT {want} FROM want",
+            f"SELECT {want} FROM want EXCEPT ALL SELECT {got} FROM got",
+        )
+    )
     con.close()
 
-    assert len(spark_rows) == len(duck_rows), (
-        f"row count {len(spark_rows)} vs oracle {len(duck_rows)}"
-    )
-    assert len(spark_rows) > 500_000  # scale sanity: ~1M triples at sf0.1
-    got = rows_to_multiset(spark_rows, spark_cols)
-    want = rows_to_multiset(duck_rows, duck_cols)
-    assert got == want, "value mismatch at sf0.1"
+    assert names["got"] == names["want"]
+    assert n["got"] == n["want"], f"row count {n['got']} vs oracle {n['want']}"
+    assert n["got"] > 500_000  # scale sanity: ~1M triples at sf0.1
+    assert only_got == only_want == 0, "value mismatch at sf0.1"
